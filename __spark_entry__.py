@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-Thin wrapper over machine_telemetry_etl_ml_pipeline_spark.registry —
-every implemented operator from SURVEY.md §2 is registered there as a
-(spark_builder, duckdb_oracle_sql) pair.
+Thin wrapper over the machine_telemetry_etl_ml_pipeline_spark.registry
+package — importing it registers every implemented operator from
+SURVEY.md §2 as a (spark_builder, duckdb_oracle_sql) pair.
 """
 
 from __future__ import annotations
@@ -16,40 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from machine_telemetry_etl_ml_pipeline_spark import registry  # noqa: E402
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext2  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext3  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext4  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext5  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext6  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext7  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext8  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext9  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext10  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext11  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext12  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext13  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext14  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext15  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext16  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext17  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext18  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext19  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext20  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext21  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext22  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext23  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext24  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext25  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext26  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext27  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext28  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext29  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext30  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext31  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext32  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_llm  # noqa: E402,F401  (extends REGISTRY)
-from machine_telemetry_etl_ml_pipeline_spark import registry_udf  # noqa: E402,F401  (extends REGISTRY)
 from machine_telemetry_etl_ml_pipeline_spark.session import tune_session  # noqa: E402
 
 

@@ -207,7 +207,8 @@ def main() -> None:
     # recorded round directly in the artifact (VERDICT r9 item 8): the
     # driver-vs-local spread (~±10-25% on same code) otherwise lets
     # ambient read as regression at suite level. Outliers listed here
-    # are the exact set needing per-query attribution (tools/ab_*.py).
+    # are the exact set needing per-query attribution (isolated A/B runs,
+    # recorded in OPTIMIZATION_r*.md).
     compare = None
     try:
         import glob as _glob

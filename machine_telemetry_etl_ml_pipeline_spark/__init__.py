@@ -14,6 +14,8 @@ Layout:
     ml            VectorAssembler/StandardScaler/GBT pipelines + anomaly
     streaming     Structured Streaming windows / watermark / dedup
     ingest        the reference's CSV->table ETL path
+    registry      the declared-query registry, one module per domain:
+                  every operator as a (spark_builder, duckdb_oracle_sql) pair
 """
 
 __version__ = "0.1.0"

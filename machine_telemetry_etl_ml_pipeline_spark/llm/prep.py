@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.prefix import with_running_total
+
 
 def chunk_documents(
     docs: DataFrame,
@@ -81,9 +83,8 @@ def md5_bucket(col, n_digits: int = 2) -> "F.Column":
 
 def hex_bucket_sql(h_expr: str, n_digits: int = 2) -> str:
     """DuckDB twin of md5_bucket, colocated with it so the two stay in
-    lockstep (registry_ext11 carries an older local copy for its
-    already-driver-verified entries): integer in [0, 16^n) from the
-    first n hex digits of an md5 SQL expression."""
+    lockstep: integer in [0, 16^n) from the first n hex digits of an
+    md5 SQL expression."""
     digit = "(strpos('0123456789abcdef', substr({h}, {p}, 1)) - 1)"
     out = digit.format(h=h_expr, p=1)
     for p in range(2, n_digits + 1):
@@ -101,84 +102,6 @@ def hash_split(
     return F.when(bucket < train_buckets, "train").otherwise("test")
 
 
-def with_running_total(
-    df: DataFrame,
-    order_col: str,
-    value_col: str,
-    out_col: str = "running_total",
-    num_parts: int | None = None,
-    total_col: str | None = None,
-) -> DataFrame:
-    """Distributed prefix sum: running total of `value_col` in
-    `order_col` order WITHOUT a single-partition global window.
-
-    The naive `Window.orderBy(order_col)` (no partitionBy) funnels the
-    whole table through one task — the classic 100 TB killer. This is
-    the two-phase PRAM scan instead:
-
-      1. range-partition on order_col (partition ids are range-ordered,
-         so cross-partition order is preserved);
-      2. per-partition cumulative sum (a PARALLEL window keyed on the
-         partition id);
-      3. per-partition totals (tiny: one row per partition) get their
-         own exclusive running sum — the only sequential step, over
-         num_parts rows, broadcast back.
-
-    Exactly equal to the global-window cumsum for unique order keys
-    (ties would be order-dependent; callers pass a key). Integer values
-    sum exactly, so the result is oracle-comparable.
-
-    total_col: optionally also attach the GRAND total of value_col to
-    every row (r14, for callers that need per-row access to n — e.g.
-    rank thresholds expressed against the row count). It derives from
-    the same num_parts-row totals frame the offsets walk already
-    aggregates, so it costs nothing beyond one more tiny window sum —
-    the whole-frame window the naive shape would have needed over the
-    DATA is avoided the same way the running sum is.
-
-    Shuffle budget: the plan carries 2-3 wide exchanges (range
-    partition, window hash partition; the totals branch re-derives its
-    input when AQE declines to reuse the range exchange) — deliberately
-    traded for eliminating the Exchange SinglePartition + single-task
-    sort of the naive global window, which is the plan that cannot run
-    at 100 TB. Totals/offsets relations are num_parts rows, so their
-    exchanges are metadata-sized.
-    """
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    n = num_parts or spark.sparkContext.defaultParallelism
-    part = df.repartitionByRange(n, F.col(order_col)).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    w_local = (
-        Window.partitionBy("__pid")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = part.withColumn("__cum", F.sum(value_col).over(w_local))
-    # aggregate totals from `local`, not `part`: local is already
-    # hash-partitioned by __pid for the window, so the groupBy reuses
-    # that exchange instead of re-shuffling the range-partitioned input
-    totals = local.groupBy("__pid").agg(F.sum(value_col).alias("__tot"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    off_cols = [
-        "__pid",
-        F.coalesce(F.sum("__tot").over(w_off), F.lit(0)).alias("__off"),
-    ]
-    if total_col is not None:
-        w_all = Window.orderBy("__pid").rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        off_cols.append(F.sum("__tot").over(w_all).alias(total_col))
-    offsets = totals.select(*off_cols)
-    return (
-        local.join(F.broadcast(offsets), "__pid")
-        .withColumn(out_col, F.col("__cum") + F.col("__off"))
-        .drop("__pid", "__cum", "__off")
-    )
-
-
 def pack_sequences(
     docs: DataFrame,
     budget: int = 512,
@@ -190,8 +113,9 @@ def pack_sequences(
     total // budget. A doc straddling a budget boundary belongs to the
     bin it starts in (streaming fill, the standard approximation of
     sequential first-fit; deterministic, so reproducible across runs
-    and cluster sizes). Built on the distributed prefix sum above —
-    no single-task global window."""
+    and cluster sizes). Built on the distributed prefix sum
+    (operators/prefix.py, range-partitioned path) — no single-task
+    global window."""
     toks = F.size(F.filter(F.split(F.col(text_col), " "), lambda x: x != ""))
     d = docs.select(F.col(id_col), toks.cast("long").alias("n_tokens"))
     cum = with_running_total(d, id_col, "n_tokens", out_col="cum_tokens")

@@ -50,7 +50,9 @@ _ATTRIBUTION_LOCK = threading.Lock()
 # real cluster an executor loss kills every query whose lineage was
 # truncated onto that executor. Setting this env var to a
 # fault-tolerant directory (HDFS/object store) switches every
-# checkpoint_rotate call to reliable Dataset.checkpoint() against it;
+# checkpoint_rotate / lazy_checkpoint call to reliable
+# Dataset.checkpoint() against it — and every checkpoint in the package
+# goes through those two (tests/test_registry_layout.py pins that);
 # the local default (unset) keeps localCheckpoint, whose in-memory
 # blocks are the right tradeoff for a single-node bench. Reliable
 # checkpoints live in the FS, not the block manager, so rotation/
@@ -60,8 +62,17 @@ _CKPT_DIR_ENV = "SPARK_GRAFT_CHECKPOINT_DIR"
 _CKPT_DIR_SET_FOR: set = set()  # SparkContext ids already configured
 
 
-def _reliable_dir() -> "str | None":
-    return os.environ.get(_CKPT_DIR_ENV) or None
+def _reliable_dir(spark: SparkSession) -> "str | None":
+    """The reliable checkpoint directory, set on `spark`'s context on
+    first use; None when the escape hatch is off."""
+    ckpt_dir = os.environ.get(_CKPT_DIR_ENV) or None
+    if ckpt_dir is not None:
+        sc = spark.sparkContext
+        if id(sc) not in _CKPT_DIR_SET_FOR:
+            sc.setCheckpointDir(ckpt_dir)
+            _CKPT_DIR_SET_FOR.add(id(sc))
+    return ckpt_dir
+
 
 # Checkpoint ids that back a RETURNED lazy frame (the iterative
 # operators' final round). bench.py sweeps the whole block manager
@@ -110,13 +121,7 @@ def checkpoint_rotate(
             "or key attribution by job group"
         )
     try:
-        ckpt_dir = _reliable_dir()
-        if ckpt_dir is not None:
-            sc = spark.sparkContext
-            ctx_id = id(sc)
-            if ctx_id not in _CKPT_DIR_SET_FOR:
-                sc.setCheckpointDir(ckpt_dir)
-                _CKPT_DIR_SET_FOR.add(ctx_id)
+        if _reliable_dir(spark) is not None:
             out = df.checkpoint(eager=True)
             plancap.note(df)
             # reliable checkpoints hold no block-manager ids; retiring
@@ -150,12 +155,7 @@ def lazy_checkpoint(df: DataFrame) -> DataFrame:
     checkpoint job; VERDICT r13 item 3). Pair with `attributed()`
     around that first action to learn the block ids for rotation.
     Honors the reliable-checkpoint escape hatch like checkpoint_rotate."""
-    ckpt_dir = _reliable_dir()
-    if ckpt_dir is not None:
-        sc = df.sparkSession.sparkContext
-        if id(sc) not in _CKPT_DIR_SET_FOR:
-            sc.setCheckpointDir(ckpt_dir)
-            _CKPT_DIR_SET_FOR.add(id(sc))
+    if _reliable_dir(df.sparkSession) is not None:
         out = df.checkpoint(eager=False)
     else:
         out = df.localCheckpoint(eager=False)

@@ -1,12 +1,6 @@
-"""UDF surface (SURVEY §2B last row): scalar pandas_udf, grouped-map
-applyInPandas, and row-at-a-time Python UDF — each oracle-checked so
-the Python<->JVM plumbing is held to the same differential bar as the
-built-in operators.
-
-Scale notes: pandas_udf/applyInPandas move Arrow BATCHES across the
-Python boundary (vectorized, ~10-100x over per-row); the plain @udf
-exists for API completeness and is the documented slow path — nothing
-in this repo uses it on a hot path.
+"""Python UDF boundary: row, pandas, Arrow and iterator UDFs, UDTFs and
+mapInPandas/mapInArrow. These entries are the documented place where
+row-at-a-time Python runs, each beside an oracle for the same result.
 """
 
 from __future__ import annotations
@@ -14,11 +8,10 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-from .registry import _t, register
+from . import _t, register
 
 
 @register(

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import math
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext11  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 
 SF = "/root/testdata/sf0.001"

@@ -8,7 +8,6 @@ import hashlib
 import math
 from collections import defaultdict
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext14  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 
 SF = "/root/testdata/sf0.001"

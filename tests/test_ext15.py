@@ -6,7 +6,6 @@ from __future__ import annotations
 
 from collections import Counter
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext15  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 
 SF = "/root/testdata/sf0.001"

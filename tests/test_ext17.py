@@ -5,7 +5,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext17  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY, _t
 
 SF = "/root/testdata/sf0.001"
@@ -286,7 +285,6 @@ def test_python_stream_source_exactly_once_across_restarts(spark):
 def test_stream_dynamic_gap_equals_batch_twin(spark):
     """The streaming state-store session merge must equal the batch
     session_window result row for row."""
-    from machine_telemetry_etl_ml_pipeline_spark import registry_ext7  # noqa: F401
 
     got = {
         (r.user_id, r.sess_start, r.sess_end, r.n_events)
@@ -333,7 +331,6 @@ def test_subsample_ci_brackets_point_estimate(spark):
 def test_asof_tolerance_is_filtered_backward_asof(spark):
     """Tolerance rows must be EXACTLY the backward as-of matches whose
     age fits the window — never a different candidate."""
-    from machine_telemetry_etl_ml_pipeline_spark import registry_ext  # noqa: F401
 
     tol = {r.event_id: (r.asof_event_id, r.age_us)
            for r in _run(spark, "ext_asof_join_tolerance").collect()}

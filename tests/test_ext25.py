@@ -8,9 +8,8 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext25  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY, _t
-from machine_telemetry_etl_ml_pipeline_spark.registry_ext9 import _copurchase_edges
+from machine_telemetry_etl_ml_pipeline_spark.registry.graph import _copurchase_edges
 
 SF = "/root/testdata/sf0.001"
 

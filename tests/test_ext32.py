@@ -6,7 +6,6 @@ tests/test_refmodels.py."""
 import numpy as np
 import pytest
 
-from machine_telemetry_etl_ml_pipeline_spark import registry_ext32  # noqa: F401
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY, _t
 
 SF = "/root/testdata/sf0.001"

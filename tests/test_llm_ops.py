@@ -293,7 +293,7 @@ def test_running_total_matches_global_window(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from machine_telemetry_etl_ml_pipeline_spark.llm.prep import with_running_total
+    from machine_telemetry_etl_ml_pipeline_spark.operators.prefix import with_running_total
 
     df = spark.range(100).select(
         F.col("id"), (F.col("id") % 7 + 1).alias("v")
@@ -313,7 +313,7 @@ def test_running_total_total_col_attaches_grand_total(spark):
     total, and the running sum is unchanged."""
     from pyspark.sql import functions as F
 
-    from machine_telemetry_etl_ml_pipeline_spark.llm.prep import with_running_total
+    from machine_telemetry_etl_ml_pipeline_spark.operators.prefix import with_running_total
 
     df = spark.range(100).select(F.col("id"), (F.col("id") % 7 + 1).alias("v"))
     out = with_running_total(
@@ -350,7 +350,7 @@ def test_adaptive_base_literal_params_match_expression(spark):
         norm,
     )
     from machine_telemetry_etl_ml_pipeline_spark.registry import _t
-    from machine_telemetry_etl_ml_pipeline_spark.registry_ext30 import (
+    from machine_telemetry_etl_ml_pipeline_spark.registry.vector import (
         _TARGET_BUCKET,
         _adaptive_base,
     )

@@ -142,7 +142,6 @@ def test_scoring_grid_is_deterministic_and_sane():
 
 
 def test_spark_path_matches_driver_scoring_bitwise(spark):
-    from machine_telemetry_etl_ml_pipeline_spark import registry_ext32  # noqa: F401
     from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY
 
     q = REGISTRY["ml_model_exact_scoring"]

@@ -9,7 +9,7 @@ Runs, in order, stopping on the first failure:
 2. full correctness sweep — every registered entry vs its DuckDB
    oracle at sf0.001 AND sf0.01 (`tools/check.py`; the driver gate's
    local replication);
-3. the pytest suite;
+3. the pytest suites (`tests/` and the benchmark's `perfbench/`);
 4. physical-plan audit with `--write` — regenerates PLANS.md's table
    in place (and stamps the audited HEAD) so the checked-in plan
    snapshot postdates every engine change this round;
@@ -62,7 +62,7 @@ def main() -> None:
             [py, "tools/check.py", "--sf", "/root/testdata/sf0.01", "--sf", "/root/testdata/sf0.001"],
         )
     if not args.skip_pytest:
-        run("pytest", [py, "-m", "pytest", "tests/", "-x", "-q"])
+        run("pytest", [py, "-m", "pytest", "tests/", "perfbench/", "-x", "-q"])
     if not args.skip_plans:
         run("plans", [py, "tools/plan_audit.py", "--write"])
     if not args.skip_bench:

@@ -13,7 +13,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as ent  # noqa: E402  (imports all registry modules)
+import __spark_entry__ as ent  # noqa: E402  (imports the registry package)
 from machine_telemetry_etl_ml_pipeline_spark.registry import REGISTRY  # noqa: E402
 
 
@@ -43,7 +43,7 @@ def main() -> None:
     for i, n in enumerate(sorted(names), 1):
         q = REGISTRY[n]
         fn = q.fn
-        mod = fn.__module__.rsplit(".", 1)[-1]
+        mod = fn.__module__.split(".", 1)[-1].replace(".", "/")
         where = f"`{mod}.py:{fn.__code__.co_firstlineno}`"
         kind = "exact" if q.oracle is not None else "rows-only"
         summary = first_sentence(fn.__doc__).replace("|", "\\|")
