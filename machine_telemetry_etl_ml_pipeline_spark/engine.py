@@ -13,6 +13,16 @@ Differences by design (SURVEY §3):
 - ``execute_query`` is spark.sql over the registered views: the
   read-vs-write dispatch heuristic (db.py:55-75) disappears because
   the DataFrame/writer split makes it structural.
+
+Per-call cost contract (pinned by tests/test_engine.py):
+- building any ``get_*`` frame runs 0 Spark jobs: every table is read
+  with its known schema (``TABLES``), so there is no schema-inference
+  job, and an absent table is an empty typed frame;
+- each log write (``log_user_query``, ``log_prediction``) runs 1 job of
+  1 task and adds exactly one parquet file;
+- a one-row ``insert_telemetry`` runs 1 job with no shuffle stage.
+Small frames are typed JVM literals (``ingest.literal_rows``), so no
+request waits on a Python worker.
 """
 
 from __future__ import annotations
@@ -22,8 +32,11 @@ from pyspark.sql import functions as F
 
 from . import ingest as _ingest
 from .plans import telemetry as plans
-from .schemas import PREDICTIONS, USER_QUERY_LOG
+from .schemas import PREDICTIONS, TELEMETRY_TABLE, USER_QUERY_LOG
 from .session import get_spark, tune_session
+
+# table name -> schema as stored
+TABLES = {"telemetry": TELEMETRY_TABLE, "user_query_log": USER_QUERY_LOG, "predictions": PREDICTIONS}
 
 
 class TelemetryEngine:
@@ -33,11 +46,7 @@ class TelemetryEngine:
     def __init__(self, root: str, spark: SparkSession | None = None):
         self.spark = tune_session(spark or get_spark("telemetry-engine"))
         self.root = root.rstrip("/")
-        self._paths = {
-            "telemetry": f"{self.root}/telemetry",
-            "user_query_log": f"{self.root}/user_query_log",
-            "predictions": f"{self.root}/predictions",
-        }
+        self._paths = {name: f"{self.root}/{name}" for name in TABLES}
 
     # --- DDL / setup (reference init_db, db.py:77-151) -------------------
 
@@ -51,15 +60,10 @@ class TelemetryEngine:
     def _read_or_empty(self, name: str) -> DataFrame:
         import os
 
-        path = self._paths[name]
+        path, schema = self._paths[name], TABLES[name]
         if os.path.exists(path):
-            return self.spark.read.parquet(path)
-        schema = {
-            "telemetry": _ingest.TELEMETRY,
-            "user_query_log": USER_QUERY_LOG,
-            "predictions": PREDICTIONS,
-        }[name]
-        return self.spark.createDataFrame([], schema)
+            return self.spark.read.schema(schema).parquet(path)
+        return _ingest.literal_rows(self.spark, [], schema)
 
     def telemetry(self) -> DataFrame:
         return self._read_or_empty("telemetry")
@@ -83,22 +87,26 @@ class TelemetryEngine:
         target_time_epoch: int | None = None,
     ) -> None:
         """reference db.py:163-169: ts_epoch default + None->0.0."""
-        row = [(role, query, intent, float(confidence or 0.0), machine_id, target_time_epoch, None)]
-        df = self.spark.createDataFrame(row, USER_QUERY_LOG).withColumn(
-            "ts_epoch", F.unix_timestamp(F.current_timestamp()).cast("long")
-        )
-        df.write.mode("append").parquet(self._paths["user_query_log"])
+        row = dict(role=role, query=query, intent=intent, confidence=float(confidence or 0.0),
+                   machine_id=machine_id, target_time_epoch=target_time_epoch)
+        self._append_log("user_query_log", row)
 
     def log_prediction(
         self, machine_id: str, intent: str, numerical_answer: float | None, features: dict
     ) -> None:
-        """reference db.py:171-185: numpy scalars are handled by Arrow;
-        the JSONB column is a native map."""
-        row = [(machine_id, intent, float(numerical_answer or 0.0), {k: float(v) for k, v in features.items()}, None)]
-        df = self.spark.createDataFrame(row, PREDICTIONS).withColumn(
+        """reference db.py:171-185: numpy scalars become floats; the
+        JSONB column is a native map."""
+        row = dict(machine_id=machine_id, intent=intent, numerical_answer=float(numerical_answer or 0.0),
+                   features={k: float(v) for k, v in features.items()})
+        self._append_log("predictions", row)
+
+    def _append_log(self, name: str, row: dict) -> None:
+        """One row, stamped with the ts_epoch write default, appended as
+        one parquet file."""
+        df = _ingest.literal_rows(self.spark, [row], TABLES[name]).withColumn(
             "ts_epoch", F.unix_timestamp(F.current_timestamp()).cast("long")
         )
-        df.write.mode("append").parquet(self._paths["predictions"])
+        df.write.mode("append").parquet(self._paths[name])
 
     # --- reads (reference get_* methods, db.py:187-475) ------------------
 

@@ -10,12 +10,22 @@ Physical layout replaces the reference's 6 btree indexes
 within partitions by (machineid, timestamp_epoch) so the composite-
 index access pattern (latest-per-machine, range scans) becomes a
 sorted, pruned columnar read.
+
+Request-path cost contract (``insert_rows`` and the ``TelemetryEngine``
+log writes, all built on ``literal_rows``): rows never leave the JVM
+through a Python worker, and a one-row call runs exactly one Spark job
+of one task with no shuffle stage, writing one parquet file. Only
+``ingest_csv`` pays the ``repartition(event_date)`` exchange; small
+inserts arrive as one partition, so they skip it.
 """
 
 from __future__ import annotations
 
+import datetime as dt
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StringType, StructField, StructType, TimestampType
 
 from .functions.timefeat import dayofweek_monday0, with_write_defaults
 from .schemas import STATUS_ENCODING, TELEMETRY, TELEMETRY_FILL
@@ -34,6 +44,28 @@ _DOUBLE_COLS = [
     "poweroutput",
     "operatinghours",
 ]
+
+
+def literal_rows(spark: SparkSession, rows: list[dict], schema: StructType) -> DataFrame:
+    """Driver-local ``rows`` as a one-partition frame typed by ``schema``.
+
+    Each value becomes a JVM literal cast to its field type (map values
+    through ``create_map``; missing keys and ``None`` become typed
+    nulls), so the frame plans as Range -> Generate with no PythonRDD
+    and no Python worker behind its one task. Values are bound as
+    literals, never spliced into SQL text, so free user text is safe.
+    An empty ``rows`` gives an empty frame with the same schema."""
+
+    def typed(value, dtype):
+        if value is None:
+            return F.lit(None).cast(dtype)
+        if isinstance(dtype, MapType):
+            kv = [typed(x, t) for k, v in value.items() for x, t in ((k, dtype.keyType), (v, dtype.valueType))]
+            return F.create_map(*kv).cast(dtype)
+        return F.lit(value).cast(dtype)
+
+    structs = [F.struct(*[typed(r.get(f.name), f.dataType).alias(f.name) for f in schema.fields]) for r in rows]
+    return spark.range(1, numPartitions=1).select(F.inline(F.array(*structs).cast(ArrayType(schema))))
 
 
 def normalize_telemetry(raw: DataFrame) -> DataFrame:
@@ -78,10 +110,16 @@ def write_telemetry(df: DataFrame, table_path: str, mode: str = "append") -> Non
     """Partitioned, in-partition-sorted sink (layout rationale in the
     module docstring). One atomic commit replaces the reference's
     psycopg2 transaction (database_and_model_tools.py:90-96)."""
+    _write_sorted(_with_event_date(df).repartition(F.col("event_date")), table_path, mode)
+
+
+def _with_event_date(df: DataFrame) -> DataFrame:
+    return df.withColumn("event_date", F.to_date("timestamp"))
+
+
+def _write_sorted(df: DataFrame, table_path: str, mode: str = "append") -> None:
     (
-        df.withColumn("event_date", F.to_date("timestamp"))
-        .repartition(F.col("event_date"))
-        .sortWithinPartitions("machineid", "timestamp_epoch")
+        df.sortWithinPartitions("machineid", "timestamp_epoch")
         .write.mode(mode)
         .partitionBy("event_date")
         .parquet(table_path)
@@ -90,16 +128,18 @@ def write_telemetry(df: DataFrame, table_path: str, mode: str = "append") -> Non
 
 def insert_rows(spark: SparkSession, rows: list[dict], table_path: str) -> int:
     """Single/small-batch insert (reference insert_telemetry,
-    project/db.py:153-161): route through the same normalize + write
-    path so write-time defaults stay consistent."""
-    raw = spark.createDataFrame(rows)
-    for f in TELEMETRY.fields:
-        if f.name not in raw.columns:
-            raw = raw.withColumn(f.name, F.lit(None).cast(f.dataType))
-    clean = normalize_telemetry(
-        raw.withColumn("timestamp", F.date_format("timestamp", CSV_TS_FORMAT))
-        if dict(raw.dtypes).get("timestamp") == "timestamp"
-        else raw
-    )
-    write_telemetry(clean, table_path)
+    project/db.py:153-161) through the same normalize path, so fill
+    defaults and write-time stamps match ``ingest_csv``. Rows are typed
+    by ``TELEMETRY``, not inferred from their values (a ``None`` metric
+    takes its fill default); ``timestamp`` is the reference CSV text,
+    or a timestamp when the caller passes a ``datetime`` (then rendered
+    to that text, as a CSV row would carry it). The input is one
+    partition, so the write needs no exchange."""
+    is_dt = any(isinstance(r.get("timestamp"), dt.datetime) for r in rows)
+    ts_type = TimestampType() if is_dt else StringType()
+    schema = StructType([StructField(f.name, ts_type) if f.name == "timestamp" else f for f in TELEMETRY.fields])
+    raw = literal_rows(spark, rows, schema)
+    if is_dt:
+        raw = raw.withColumn("timestamp", F.date_format("timestamp", CSV_TS_FORMAT))
+    _write_sorted(_with_event_date(normalize_telemetry(raw)), table_path)
     return len(rows)

@@ -1,9 +1,10 @@
-"""Invariant tests for the round-5 batch-4/5 entries (registry_ext10):
-reset semantics and audio RMS recomputed in Python, brute-force
-Gini/argmin sweeps, lateral-alias expression substitution, SemDeDup
-monotonicity, join-view IVM equality, PCA eigenvalue bounds,
-confusion-cell identities, binaryFile digests, schema-evolution
-null-fills, and depth-2 tree partitioning."""
+"""Invariant tests for the round-5 batch-4/5 entries (registry/ml.py,
+registry/storage.py, registry/sql.py, registry/text.py,
+registry/vector.py, registry/windows.py): reset semantics and audio RMS
+recomputed in Python, brute-force Gini/argmin sweeps, lateral-alias
+expression substitution, SemDeDup monotonicity, join-view IVM equality,
+PCA eigenvalue bounds, confusion-cell identities, binaryFile digests,
+schema-evolution null-fills, and depth-2 tree partitioning."""
 
 from __future__ import annotations
 

@@ -1,9 +1,9 @@
-"""Invariant tests for the round-5 batch-6 entries (registry_ext11):
-properties the DuckDB oracle gate can't express — brute-force AUC and
-weighted-sample cross-checks against independent Python computations,
-the bloom filter's no-false-negative guarantee, calibration/Brier
-identities, ridge residual optimality, and feature-hash mass
-conservation."""
+"""Invariant tests for the round-5 batch-6 entries (registry/ml.py,
+registry/text.py, registry/analytics.py): properties the DuckDB oracle
+gate can't express — brute-force AUC and weighted-sample cross-checks
+against independent Python computations, the bloom filter's
+no-false-negative guarantee, calibration/Brier identities, ridge
+residual optimality, and feature-hash mass conservation."""
 
 from __future__ import annotations
 

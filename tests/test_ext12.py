@@ -1,4 +1,4 @@
-"""Invariant tests for the round-5 batch-7 entries (registry_ext12):
+"""Invariant tests for the round-5 batch-7 entries (registry/ml.py):
 brute-force KS and NDCG cross-checks against independent Python
 computations, and PSI smoothing/mass identities."""
 

@@ -1,4 +1,5 @@
-"""Invariant tests for the round-5 batch-8 entries (registry_ext13):
+"""Invariant tests for the round-5 batch-8 entries (registry/ml.py,
+registry/windows.py, registry/analytics.py, registry/streaming.py):
 brute-force recounts for the Count-Min sketch and interval merge, a
 scipy-free Spearman cross-check, and lift-table mass identities."""
 

@@ -1,6 +1,6 @@
-"""Invariant tests for the round-5 batch-9 entries (registry_ext14):
-brute-force recomputation of the two-proportion z-test and Welch's
-t-test from raw rows, plus statistical identities."""
+"""Invariant tests for the round-5 batch-9 entries (registry/ml.py,
+registry/windows.py): brute-force recomputation of the two-proportion
+z-test and Welch's t-test from raw rows, plus statistical identities."""
 
 from __future__ import annotations
 

@@ -1,6 +1,6 @@
-"""Invariant tests for the round-5 batch-10 entries (registry_ext15):
-the SQL-programmability layer must be pure assembly — identical
-results to the static formulations, re-runnable in one session."""
+"""Invariant tests for the round-5 batch-10 entries (registry/sql.py):
+the SQL-programmability layer must be pure assembly — identical results
+to the static formulations, re-runnable in one session."""
 
 from __future__ import annotations
 

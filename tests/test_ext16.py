@@ -1,4 +1,5 @@
-"""Invariant tests for the round-6 batch (registry_ext16): idempotent
+"""Invariant tests for the round-6 batch (registry/graph.py,
+registry/ml.py, registry/sql.py, registry/streaming.py): idempotent
 foreachBatch sink, AQE skew join, label propagation, boosted stumps."""
 
 from __future__ import annotations

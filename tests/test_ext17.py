@@ -1,4 +1,6 @@
-"""Invariant tests for the round-6 part-2 batch (registry_ext17):
+"""Invariant tests for the round-6 part-2 batch (registry/ml.py,
+registry/windows.py, registry/analytics.py, registry/sql.py,
+registry/streaming.py, registry/storage.py, registry/text.py):
 Kaplan-Meier, skyline, seasonal indices, pagination, by-name union."""
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
-"""Invariant tests for the round-6 part-3 batch (registry_ext18):
-OHLC resampling, linear interpolation, average precision, Cohen's
-kappa, Cramer's V — each checked against a brute-force Python
-recompute or a structural invariant at sf0.001."""
+"""Invariant tests for the round-6 part-3 batch (registry/ml.py,
+registry/windows.py): OHLC resampling, linear interpolation, average
+precision, Cohen's kappa, Cramer's V — each checked against a
+brute-force Python recompute or a structural invariant at sf0.001."""
 
 from __future__ import annotations
 

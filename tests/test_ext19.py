@@ -1,6 +1,7 @@
-"""Invariant tests for the round-6 part-4 batch (registry_ext19):
-table checksum, bitmap distinct, Bollinger bands, URL
-canonicalization, common-neighbor link prediction."""
+"""Invariant tests for the round-6 part-4 batch (registry/analytics.py,
+registry/graph.py, registry/storage.py, registry/text.py,
+registry/windows.py): table checksum, bitmap distinct, Bollinger bands,
+URL canonicalization, common-neighbor link prediction."""
 
 from __future__ import annotations
 

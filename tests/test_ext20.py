@@ -1,6 +1,7 @@
-"""Invariant tests for the round-6 part-5 batch (registry_ext20):
-Kendall tau-b, Theil-Sen slope, Z-order clustering, code detection,
-embedding outliers."""
+"""Invariant tests for the round-6 part-5 batch (registry/ml.py,
+registry/storage.py, registry/text.py, registry/vector.py): Kendall
+tau-b, Theil-Sen slope, Z-order clustering, code detection, embedding
+outliers."""
 
 from __future__ import annotations
 

@@ -1,6 +1,6 @@
-"""Invariant tests for the round-6 part-6 batch (registry_ext21):
-RFM segmentation, ABC classification, one-way ANOVA, Matthews
-correlation, Brier score."""
+"""Invariant tests for the round-6 part-6 batch (registry/ml.py,
+registry/analytics.py): RFM segmentation, ABC classification, one-way
+ANOVA, Matthews correlation, Brier score."""
 
 from __future__ import annotations
 

@@ -1,5 +1,6 @@
-"""Invariant tests for the round-6 part-7 batch (registry_ext22):
-k-core peeling, weighted SSSP, and 1-D Gaussian-mixture EM."""
+"""Invariant tests for the round-6 part-7 batch (registry/graph.py,
+registry/ml.py): k-core peeling, weighted SSSP, and 1-D Gaussian-mixture
+EM."""
 
 from __future__ import annotations
 

@@ -1,5 +1,6 @@
-"""Invariant tests for the round-6 part-8 batch (registry_ext23):
-HMM forward posterior, MMR re-rank, Flesch readability."""
+"""Invariant tests for the round-6 part-8 batch (registry/ml.py,
+registry/text.py, registry/vector.py): HMM forward posterior, MMR
+re-rank, Flesch readability."""
 
 from __future__ import annotations
 

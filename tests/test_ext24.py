@@ -1,6 +1,6 @@
-"""Invariant tests for the round-6 part-9 batch (registry_ext24):
-RAKE keywords, lang-ID confusion, bagged-stump forest, point-in-time
-churn labels, dynamic partition pruning."""
+"""Invariant tests for the round-6 part-9 batch (registry/ml.py,
+registry/text.py): RAKE keywords, lang-ID confusion, bagged-stump
+forest, point-in-time churn labels, dynamic partition pruning."""
 
 from __future__ import annotations
 

@@ -1,6 +1,6 @@
-"""Invariant tests for the round-6 part-10 batch (registry_ext25):
-LOO target encoding, span corruption, clustering coefficient,
-tokenizer fertility, learning curve."""
+"""Invariant tests for the round-6 part-10 batch (registry/ml.py,
+registry/text.py, registry/graph.py): LOO target encoding, span
+corruption, clustering coefficient, tokenizer fertility, learning curve."""
 
 from __future__ import annotations
 

@@ -1,5 +1,6 @@
-"""Invariant tests for the round-6 part-11 batch (registry_ext26):
-DID, CUPED, McNemar, assortativity, cross-lingual overlap."""
+"""Invariant tests for the round-6 part-11 batch (registry/ml.py,
+registry/graph.py, registry/text.py): DID, CUPED, McNemar,
+assortativity, cross-lingual overlap."""
 
 from __future__ import annotations
 

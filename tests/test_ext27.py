@@ -1,6 +1,7 @@
-"""Invariant tests for the round-6 part-12 batch (registry_ext27):
-SPRT, winsorized mean, inter-arrival stats, preference pairs,
-blocked fuzzy linkage."""
+"""Invariant tests for the round-6 part-12 batch (registry/ml.py,
+registry/analytics.py, registry/text.py, registry/windows.py): SPRT,
+winsorized mean, inter-arrival stats, preference pairs, blocked fuzzy
+linkage."""
 
 from __future__ import annotations
 

@@ -1,6 +1,6 @@
-"""Invariant tests for the round-6 part-13 batch (registry_ext28):
-Holt-Winters seasonal, item-item cosine, token-budget fill, interval
-arithmetic."""
+"""Invariant tests for the round-6 part-13 batch (registry/windows.py,
+registry/ml.py, registry/text.py): Holt-Winters seasonal, item-item
+cosine, token-budget fill, interval arithmetic."""
 
 from __future__ import annotations
 

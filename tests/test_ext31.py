@@ -1,5 +1,6 @@
-"""Thirty-first extension batch: mergeable quantile sketch + FULL
-OUTER stream-stream interval join (registry_ext31.py).
+"""Thirty-first extension batch: mergeable quantile sketch + FULL OUTER
+stream-stream interval join (registry/analytics.py,
+registry/streaming.py).
 
 Properties pinned here (the DuckDB oracles check engine parity; these
 check the MATH):

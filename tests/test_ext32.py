@@ -1,7 +1,7 @@
 """Property / brute-force tests for the r9 statistical + packing
-additions (registry_ext32: ml_kfold_cv, ml_conformal_interval,
-llm_sequence_packing). The model-exact scoring entry is covered by
-tests/test_refmodels.py."""
+additions (registry/ml.py: ml_kfold_cv, ml_conformal_interval;
+registry/text.py: llm_sequence_packing). The model-exact scoring entry
+is covered by tests/test_refmodels.py."""
 
 import numpy as np
 import pytest

@@ -1,4 +1,6 @@
-"""Round-3 batch (registry_ext6): retrieval, graph, and maintenance
+"""Round-3 batch (registry/text.py, registry/analytics.py,
+registry/storage.py, registry/windows.py, registry/graph.py,
+registry/ml.py, registry/sql.py): retrieval, graph, and maintenance
 operator properties that hold at any scale — the DuckDB-oracle gate
 (tools/check.py) is the exact-value signal; these assert the invariants
 that survive a testdata regeneration."""

@@ -1,7 +1,10 @@
-"""Round-4 batch (registry_ext7): streaming top-k materialization and
-corpus-curation operator properties that hold at any scale — the
-DuckDB-oracle gate (tools/check.py) is the exact-value signal; these
-assert the invariants that survive a testdata regeneration."""
+"""Round-4 batch (registry/text.py, registry/storage.py,
+registry/streaming.py, registry/analytics.py, registry/ml.py,
+registry/sql.py, registry/vector.py, registry/windows.py): streaming
+top-k materialization and corpus-curation operator properties that hold
+at any scale — the DuckDB-oracle gate (tools/check.py) is the
+exact-value signal; these assert the invariants that survive a testdata
+regeneration."""
 
 from __future__ import annotations
 

@@ -1,7 +1,8 @@
 """Invariant tests for the round-5 corpus-curation batch
-(registry_ext8): properties the DuckDB oracle gate can't express —
-membership stability under re-partitioning, quota bounds, shard
-completeness, norm non-negativity, Zipf monotonicity."""
+(registry/text.py, registry/storage.py, registry/vector.py): properties
+the DuckDB oracle gate can't express — membership stability under
+re-partitioning, quota bounds, shard completeness, norm non-negativity,
+Zipf monotonicity."""
 
 from __future__ import annotations
 

@@ -1,8 +1,10 @@
-"""Invariant tests for the round-5 batch-2/3 entries (registry_ext9):
+"""Invariant tests for the round-5 batch-2/3 entries (registry/graph.py,
+registry/ml.py, registry/sql.py, registry/analytics.py,
+registry/reference.py, registry/text.py, registry/windows.py):
 properties the DuckDB oracle gate can't express — pipe/ANSI plan
-equivalence, collation-aware grouping without data rewrite, ACF
-bounds, brute-force triangle/BFS cross-checks, equi-depth balance,
-and GD/KMeans determinism under re-partitioning."""
+equivalence, collation-aware grouping without data rewrite, ACF bounds,
+brute-force triangle/BFS cross-checks, equi-depth balance, and GD/KMeans
+determinism under re-partitioning."""
 
 from __future__ import annotations
 

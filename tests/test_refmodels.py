@@ -1,7 +1,7 @@
 """Exactness anchors for the reference-model extraction + scoring
-(ml/refmodels.py, registry_ext32.py). Every check here validates the
-extraction against REDUNDANT data stored inside the blobs themselves,
-so none depends on this repo's reading of the scoring algorithms."""
+(ml/refmodels.py, registry/ml.py). Every check here validates the
+extraction against REDUNDANT data stored inside the blobs themselves, so
+none depends on this repo's reading of the scoring algorithms."""
 
 import numpy as np
 import pytest

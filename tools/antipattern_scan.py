@@ -2,7 +2,8 @@
 
 Every round the judge greps the package for driver-side / slow-path
 shapes — `.collect()`, `.crossJoin(`, `.toPandas()`, row-at-a-time
-`F.udf`, raw `.rdd` access, `mapPartitions` — and re-verifies that
+`F.udf`, raw `.rdd` access, `mapPartitions`, Python-list
+`createDataFrame` frames — and re-verifies that
 each site is bounded by construction (1-row parameter panels, ≤20-row
 rebuilt frames, convergence probes, the documented
 registry/python_boundary.py slow-path demo). The counts have been stable for rounds (r9 == r10:
@@ -46,6 +47,9 @@ PATTERNS = {
     "row_udf": re.compile(r"(?<!pandas_)\budf\("),
     "raw_rdd": re.compile(r"\.rdd\b"),
     "mapPartitions": re.compile(r"\.mapPartitions\("),
+    # a frame from a Python list is a PythonRDD: its tasks wait on a
+    # Python worker (ingest.literal_rows builds typed JVM literals)
+    "createDataFrame": re.compile(r"\.createDataFrame\("),
 }
 
 
