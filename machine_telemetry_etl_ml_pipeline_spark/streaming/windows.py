@@ -8,6 +8,18 @@ Batch twins of the window aggregations live in registry/windows.py
 (ext_tumbling_window / ext_sliding_window / ext_session_windows) where
 they are oracle-checked; streaming state itself is rows-only by the
 driver contract (SURVEY §7 hard spot e).
+
+What one micro-batch writes to its checkpoint: an offset-log entry
+(`offsets/<n>`, before the batch runs), a file-source log entry
+(`sources/0/<n>`, for `file_stream`), a commit-log entry
+(`commits/<n>`, after it), and for each stateful operator one state
+delta per shuffle partition (`state/<op>/<part>/<n+1>.delta` with its
+Spark `.crc` checksum file); Hadoop's local filesystem adds a
+`.<name>.crc` beside every file. Each is written to a temp file and
+renamed into place. On a local session those renames make no
+`readlink` forks: `session.get_spark`/`tune_session` pick Spark's
+FileSystem-based checkpoint manager there (see session.py, "Scale
+posture").
 """
 
 from __future__ import annotations
